@@ -534,6 +534,41 @@ def locf(
 GRID_SEG_ROWS = 100_000
 
 
+def grid_segment_rows(
+    rollup: DataFrame, tier: str = "1m", day_span: int | None = None
+) -> int | None:
+    """``gap_fill_rollup``'s "auto" gate: ``GRID_SEG_ROWS`` when the
+    longest conversation grid reaches it, else ``None``.
+
+    ``day_span``, when the caller knows it (e.g. the stored table's
+    partition day range), is a metadata-only witness: no conversation's
+    grid outruns the days its buckets fall on, so ``day_span`` × buckets
+    per day below the threshold decides plain with no Spark job.  Above
+    it, the exact witness runs: the longest conversation grid, ``max over
+    convs of (max−min bucket)/step + 1``, one partial-aggregated
+    two-column pass over the SPARSE rollup (≪ grid rows).
+    """
+    step = _SECONDS[tier]
+    if day_span is not None and day_span * (86400 // step) < GRID_SEG_ROWS:
+        return None
+    # NTZ-safe: cast through timestamp before double (Spark 4 forbids
+    # TIMESTAMP_NTZ→double; session TZ is pinned UTC) — same pattern
+    # as interpolate_dense/sessions (ADVICE r06)
+    mx = (
+        rollup.groupBy("conv_id")
+        .agg(
+            (
+                (F.max("bucket_start").cast("timestamp").cast("double")
+                 - F.min("bucket_start").cast("timestamp").cast("double"))
+                / F.lit(step)
+            ).alias("_span")
+        )
+        .agg(F.max("_span"))
+        .first()[0]
+    )
+    return GRID_SEG_ROWS if (mx or 0) + 1 >= GRID_SEG_ROWS else None
+
+
 def gap_fill_rollup(
     rollup: DataFrame,
     tier: str = "1m",
@@ -553,47 +588,33 @@ def gap_fill_rollup(
     same insurance-premium shape as the segmented lag
     (SEG_OVERHEAD_r06.json → its adaptive gate).
 
-    **Auto gate (default)**: the hazard has an exact, cheap witness —
-    the longest conversation grid, ``max over convs of
-    (max−min bucket)/step + 1``, one partial-aggregated two-column pass
-    over the SPARSE rollup (≪ grid rows).  Below ``GRID_SEG_ROWS`` every
-    per-conv sort is bounded and the plain form is chosen; the two forms
-    are bit-equal (pandas-parity + dense≡plain tests, and the A/B
-    asserts checksum equality), so the gate is value-neutral.  Explicit
-    ``int`` forces the dense path (threshold ignored — callers with
-    catalog stats); ``None`` forces plain.  Eager caveat: "auto" runs
-    one Spark job at plan-build time.
+    **Auto gate (default)**: the hazard has an exact, cheap witness
+    (``grid_segment_rows``).  Below ``GRID_SEG_ROWS`` every per-conv
+    sort is bounded and the plain form is chosen; the two forms are
+    bit-equal (pandas-parity + dense≡plain tests, and the A/B asserts
+    checksum equality), so the gate is value-neutral.  Explicit ``int``
+    forces the dense path (threshold ignored — callers with catalog
+    stats); ``None`` forces plain.  Eager caveat: "auto" runs one Spark
+    job at plan-build time.
+
+    **Cache ownership**: "auto" persists ``rollup`` (MEMORY_AND_DISK),
+    because the probe, the spine bounds, the densify join's build side
+    (and, on the dense path, the anchor summary and day spine) each
+    reference it, and Spark plans are trees — every reference re-ran the
+    whole upstream subtree, rollup aggregation included.  The cache stays
+    registered until it is unpersisted explicitly (the ContextCleaner
+    does not release a DataFrame cache), so the caller owns it: call
+    ``rollup.unpersist()`` once the result is drained.  Callers that
+    resolve the gate themselves (``grid_segment_rows``, as
+    plans/pipeline does) pass an explicit ``segment_rows`` and nothing
+    is cached.
     """
     step = _SECONDS[tier]
-    # Materialize the sparse rollup once: the auto-gate probe, the spine
-    # bounds aggregate, the densify join's build side (and, on the dense
-    # path, the anchor summary + day spine) each reference this frame, and
-    # Spark plans are trees — every reference re-ran the whole upstream
-    # subtree (rollup aggregation included).  One MEMORY_AND_DISK persist
-    # turns 3-4 upstream evaluations into 1; the sparse tier is ~1 % of
-    # raw bytes at any scale, so the footprint is the cheap side of the
-    # trade.  Blocks are released by the ContextCleaner when the frame is
-    # garbage-collected.
-    from pyspark.storagelevel import StorageLevel
-
-    rollup = rollup.persist(StorageLevel.MEMORY_AND_DISK)
     if segment_rows == "auto":
-        # NTZ-safe: cast through timestamp before double (Spark 4 forbids
-        # TIMESTAMP_NTZ→double; session TZ is pinned UTC) — same pattern
-        # as interpolate_dense/sessions (ADVICE r06)
-        mx = (
-            rollup.groupBy("conv_id")
-            .agg(
-                (
-                    (F.max("bucket_start").cast("timestamp").cast("double")
-                     - F.min("bucket_start").cast("timestamp").cast("double"))
-                    / F.lit(step)
-                ).alias("_span")
-            )
-            .agg(F.max("_span"))
-            .first()[0]
-        )
-        segment_rows = GRID_SEG_ROWS if (mx or 0) + 1 >= GRID_SEG_ROWS else None
+        from pyspark.storagelevel import StorageLevel
+
+        rollup = rollup.persist(StorageLevel.MEMORY_AND_DISK)
+        segment_rows = grid_segment_rows(rollup, tier)
     if segment_rows:
         dense = densify(rollup, tier)
         dense = dense.withColumn(

@@ -71,6 +71,13 @@ FEATURES = ["latency"]  # numeric per-turn features rolled up
 LAG_SEG_ROWS = 100_000
 
 
+def lag_segment_rows(max_turn_idx: int | None) -> int | None:
+    """``turn_features``' "auto" gate from its witness, the largest
+    ``turn_idx``: segment the lag only when some conversation reaches a
+    second block (see ``turn_features``)."""
+    return LAG_SEG_ROWS if (max_turn_idx or 0) >= LAG_SEG_ROWS else None
+
+
 def turn_features(
     df: DataFrame,
     latency_col: str | None = None,
@@ -121,8 +128,7 @@ def turn_features(
             "is_tool", F.col("tool").isNotNull().cast("int")
         )
     if seg_rows == "auto":
-        mx = df.agg(F.max("turn_idx")).first()[0]
-        seg_rows = LAG_SEG_ROWS if (mx or 0) >= LAG_SEG_ROWS else None
+        seg_rows = lag_segment_rows(df.agg(F.max("turn_idx")).first()[0])
     # the intermediate cast("timestamp") makes this work for both
     # TIMESTAMP and TIMESTAMP_NTZ sources (Spark 4 forbids NTZ→double
     # directly; session TZ is pinned UTC so NTZ→LTZ is deterministic)

@@ -22,13 +22,14 @@ laid out exactly like the Iceberg tables they stand in for.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from more_pattern_extraction_spark.session import local_frame
 
 CHECKPOINT_SCHEMA = (
     "job string, tier string, conv_bucket int, ts_bucket timestamp, "
@@ -50,7 +51,7 @@ class CheckpointStore:
         try:
             df = self.spark.read.parquet(self.cp_path)
         except Exception:
-            return self.spark.createDataFrame([], CHECKPOINT_SCHEMA)
+            return local_frame(self.spark, [], CHECKPOINT_SCHEMA)
         return df.filter((F.col("job") == job) & (F.col("tier") == tier))
 
     def pending_units(
@@ -101,16 +102,18 @@ class CheckpointStore:
 
     # -- metrics ------------------------------------------------------------
 
+    def metrics_row(self, job: str, **kv) -> DataFrame:
+        """One run's metrics row: job, a fresh run id, the wall-clock
+        time, and one double column per keyword."""
+        return local_frame(
+            self.spark,
+            [(job, str(uuid.uuid4()), time.time(), *map(float, kv.values()))],
+            "job string, run_id string, ts double"
+            + "".join(f", {k} double" for k in kv),
+        )
+
     def record_metrics(self, job: str, **kv) -> None:
-        row = {"job": job, "run_id": str(uuid.uuid4()), "ts": time.time(), **kv}
-        df = self.spark.createDataFrame([json.dumps(row)], "string").select(
-            F.from_json(
-                "value",
-                "job string, run_id string, ts double, "
-                + ", ".join(f"{k} double" for k in kv),
-            ).alias("m")
-        ).select("m.*")
-        df.write.mode("append").parquet(self.metrics_path)
+        self.metrics_row(job, **kv).write.mode("append").parquet(self.metrics_path)
 
     def metrics(self) -> DataFrame:
         return self.spark.read.parquet(self.metrics_path)

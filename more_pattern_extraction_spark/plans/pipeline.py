@@ -18,12 +18,32 @@ Stages (each checkpointed per (conv_bucket, ts_day) unit):
 Resume: a second invocation with the same input snapshot anti-joins the
 checkpoint table and does nothing; a partially-complete run redoes only
 missing units (tests/test_pipeline.py proves resume == cold run).
+
+Work units are planned once, up front (``plan_units``): one collected
+aggregate over the raw turns returns every unit with its turn count and
+the largest ``turn_idx``.  The checkpoint anti-join runs on that list,
+and the pending units enter the ``todo`` join, the ``distinct_1m`` scope
+and the commit as a JVM-local relation (``session.local_frame``), so no
+unit list is recounted or re-planned and no control frame needs a Python
+worker.  The eager actions left, in order:
+
+  * the unit-plan aggregate (its ``max(turn_idx)`` is the lag gate's
+    witness, so ``turn_features`` runs no probe of its own);
+  * the checkpoint anti-join, collected (no job when there is no
+    checkpoint table yet);
+  * the tier writes, each re-read by the next stage;
+  * the gap-fill gate's exact probe, only when the metadata witness (the
+    stored ``rollup_1m`` day range × buckets per day) cannot rule the
+    dense path out;
+  * the retention drops (directory deletes), and the checkpoint,
+    lineage and metrics appends.
 """
 
 from __future__ import annotations
 
 import argparse
 import time
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,9 +54,51 @@ from more_pattern_extraction_spark.operators import gapfill as G
 from more_pattern_extraction_spark.operators import rollup as R
 from more_pattern_extraction_spark.operators import sketch as SK
 from more_pattern_extraction_spark.plans.checkpoint import CheckpointStore, content_hash
+from more_pattern_extraction_spark.session import local_frame
 from more_pattern_extraction_spark.sources import catalog as CAT
 
 JOB = "rollup_pipeline"
+UNIT_SCHEMA = "conv_bucket int, ts_day date"
+
+
+class UnitPlan(NamedTuple):
+    """``units``: one ``(conv_bucket, ts_day, turns)`` per work unit;
+    ``max_turn_idx``: the largest ``turn_idx`` (``None`` when not asked
+    for, or when every ``turn_idx`` is NULL)."""
+
+    units: list[tuple]
+    max_turn_idx: int | None
+
+
+def plan_units(turns: DataFrame, n_buckets: int, with_turn_idx: bool = True) -> UnitPlan:
+    """Every ``(conv_bucket, ts_day)`` unit of the raw turns with its turn
+    count, from one collected aggregate.  A NULL ``ts``
+    gives a NULL-``ts_day`` unit, as in the distinct unit list it stands
+    for."""
+    aggs = [F.count(F.lit(1)).alias("turns")]
+    if with_turn_idx:
+        aggs.append(F.max("turn_idx").alias("max_turn_idx"))
+    rows = (
+        CAT.with_layout_cols(turns, n_buckets)
+        .groupBy("conv_bucket", "ts_day")
+        .agg(*aggs)
+        .collect()
+    )
+    mx = None
+    if with_turn_idx:
+        mx = max((r["max_turn_idx"] for r in rows if r["max_turn_idx"] is not None),
+                 default=None)
+    return UnitPlan([(r["conv_bucket"], r["ts_day"], r["turns"]) for r in rows], mx)
+
+
+def unit_frame(spark: SparkSession, units: list[tuple]) -> DataFrame:
+    """``(conv_bucket, ts_day)`` of ``units`` as a JVM-local relation."""
+    return local_frame(spark, [u[:2] for u in units], UNIT_SCHEMA)
+
+
+def _checkpoint_keys(units: DataFrame) -> DataFrame:
+    """A unit frame keyed like the checkpoint table: (conv_bucket, ts_bucket)."""
+    return units.select("conv_bucket", F.col("ts_day").cast("timestamp").alias("ts_bucket"))
 
 
 def run_pipeline(
@@ -53,27 +115,27 @@ def run_pipeline(
     t0 = time.time()
     cp = CheckpointStore(spark, out_root)
 
-    feats = R.turn_features(turns, latency_col=latency_col)
-    feats = CAT.with_layout_cols(feats, n_buckets)  # conv_bucket, ts_day
-
-    units = feats.select("conv_bucket", F.col("ts_day").cast("timestamp").alias("ts_bucket")).distinct()
-    n_units_total = units.count()
+    # the lag gate needs max(turn_idx) only when latency is derived here
+    derive_lag = not (latency_col and latency_col in turns.columns)
+    plan = plan_units(turns, n_buckets, with_turn_idx=derive_lag)
+    n_units_total = len(plan.units)
+    pending = plan.units
     if resume:
-        pending = cp.pending_units(units, JOB, "1m", input_snapshot)
-    else:
-        pending = units
-    n_pending = pending.count()
+        left = cp.pending_units(
+            _checkpoint_keys(unit_frame(spark, plan.units)), JOB, "1m", input_snapshot
+        ).select("conv_bucket", F.col("ts_bucket").cast("date").alias("ts_day"))
+        keys = {(r["conv_bucket"], r["ts_day"]) for r in left.collect()}
+        pending = [u for u in plan.units if u[:2] in keys]
+    n_pending = len(pending)
 
     if n_pending:
-        todo = feats.join(
-            F.broadcast(
-                pending.select(
-                    "conv_bucket", F.col("ts_bucket").cast("date").alias("ts_day")
-                )
-            ),
-            ["conv_bucket", "ts_day"],
-        )
-        n_turns = todo.count()
+        feats = R.turn_features(turns, latency_col=latency_col,
+                                seg_rows=R.lag_segment_rows(plan.max_turn_idx))
+        feats = CAT.with_layout_cols(feats, n_buckets)  # conv_bucket, ts_day
+        pend = unit_frame(spark, pending)
+        todo = feats.join(F.broadcast(pend), ["conv_bucket", "ts_day"])
+        # the inner join drops NULL-ts_day units' turns
+        n_turns = sum(n for _, day, n in pending if day is not None)
 
         # every persisted tier carries the mergeable latency sketch map +
         # its derived true-tier p95 alongside the documented
@@ -109,18 +171,16 @@ def run_pipeline(
         # scope to pending units (the stored tier also holds units done by
         # earlier runs — rewriting their partitions would be value-identical
         # but defeat resume incrementality)
-        kmv1m = kmv1m.join(
-            F.broadcast(
-                pending.select(
-                    "conv_bucket", F.col("ts_bucket").cast("date").alias("ts_day")
-                )
-            ),
-            ["conv_bucket", "ts_day"],
-        )
+        kmv1m = kmv1m.join(F.broadcast(pend), ["conv_bucket", "ts_day"])
         CAT.write_partitioned(kmv1m, out_root, "distinct_1m",
                               sort_cols=("bucket_start",))
 
-        filled = G.gap_fill_rollup(CAT.read_table(spark, out_root, "rollup_1m"), "1m")
+        # the stored day range bounds every conversation's grid span, so
+        # the exact probe runs only when that cannot rule the dense path out
+        seg = G.grid_segment_rows(
+            r1m_stored, "1m", day_span=CAT.partition_day_span(out_root, "rollup_1m")
+        )
+        filled = G.gap_fill_rollup(r1m_stored, "1m", segment_rows=seg)
         filled = CAT.with_layout_cols(filled, n_buckets)
         CAT.write_partitioned(filled, out_root, "rollup_1m_filled",
                               sort_cols=("conv_id", "bucket_start"))
@@ -171,7 +231,7 @@ def run_pipeline(
             ["conv_id", "bucket_start", "turn_cnt", "latency_cnt"],
         )
         cp.record_lineage(JOB, "1m", input_snapshot, lineage)
-        cp.commit(pending, JOB, "1m", input_snapshot)
+        cp.commit(_checkpoint_keys(pend), JOB, "1m", input_snapshot)
     else:
         n_turns = 0
 
@@ -202,7 +262,11 @@ def run_pattern_stage(
     top-k discords + FLUSS regimes, all written as queryable partitioned
     tables.  Window-keying bounds every task for hot conversations; the
     MP artifact is persisted once and both downstream extractions re-read
-    it (the reference reloads its npz the same way, io.py:39-55)."""
+    it (the reference reloads its npz the same way, io.py:39-55).  The
+    returned row counts are those of the stored tables.  Each run
+    recomputes every window of the filled grid, so a rerun overwrites
+    every partition an earlier run wrote; only a run with another
+    ``window``, which shares ``discords`` and ``regimes``, adds to them."""
     from more_pattern_extraction_spark.operators import matrix_profile as MP
     from more_pattern_extraction_spark.operators import motifs as MO
     from more_pattern_extraction_spark.operators import segmentation as SG
@@ -253,11 +317,13 @@ def run_pattern_stage(
     ).withColumn("ts_day", F.col("win").cast("date"))
     CAT.write_partitioned(regimes, out_root, "regimes")
 
+    # row counts of the stored tables: counting ``disc``/``regimes`` would
+    # re-run their pandas kernels just to count rows
     out = {
         "pattern_wall_s": time.time() - t0,
         "mp_rows": float(mp_saved.count()),
-        "discord_rows": float(disc.count()),
-        "regime_rows": float(regimes.count()),
+        "discord_rows": float(CAT.read_table(spark, out_root, "discords").count()),
+        "regime_rows": float(CAT.read_table(spark, out_root, "regimes").count()),
     }
     cp = CheckpointStore(spark, out_root)
     cp.record_metrics("pattern_stage", **out)

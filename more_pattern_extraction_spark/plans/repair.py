@@ -265,7 +265,10 @@ def repair_late_turns(
     )
 
     # --- gap-fill: needs whole conversations; write affected days ----------
-    filled = G.gap_fill_rollup(base, "1m")
+    seg = G.grid_segment_rows(
+        base, "1m", day_span=CAT.partition_day_span(out_root, "rollup_1m")
+    )
+    filled = G.gap_fill_rollup(base, "1m", segment_rows=seg)
     filled = CAT.with_layout_cols(filled, n_buckets)
     CAT.write_partitioned(
         _only_units(filled, units), out_root, "rollup_1m_filled",

@@ -76,6 +76,29 @@ def get_spark(
     return spark
 
 
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str):
+    """A small table held in Python (``rows``: tuples in ``schema`` field
+    order) as a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(list)`` plans a ``Scan ExistingRDD`` over a
+    Python RDD, so every job that reads the frame round-trips through a
+    Python worker.  The rows are shipped as one Arrow table instead, which
+    the JVM holds as a ``LocalRelation``: plans over it run without Python,
+    and broadcasting it needs no Spark job.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema=struct)
+
+
 class DrainResult(NamedTuple):
     """Result of a full-evaluation drain: row count + value checksum."""
 
@@ -96,10 +119,19 @@ def drain_checksum(df) -> DrainResult:
     value live; the reduction itself is one long per partition.  The
     checksum is also returned so runs can be compared value-level, not
     just by cardinality.
+
+    ``xxhash64`` refuses map arguments, and a map's entry order is an
+    artifact of how it was built, so a map column is hashed in place as
+    its key-sorted entries (``array_sort(map_entries(c))``); other columns
+    are hashed as they are.
     """
     from pyspark.sql import functions as F
+    from pyspark.sql.types import MapType
 
-    row = df.select(F.xxhash64(*df.columns).alias("h")).agg(
+    maps = {f.name for f in df.schema.fields if isinstance(f.dataType, MapType)}
+    cols = [F.array_sort(F.map_entries(F.col(f"`{c}`"))) if c in maps else c
+            for c in df.columns]
+    row = df.select(F.xxhash64(*cols).alias("h")).agg(
         F.sum("h").alias("checksum"), F.count(F.lit(1)).alias("rows")
     ).collect()[0]
     return DrainResult(row.rows, row.checksum if row.checksum is not None else 0)

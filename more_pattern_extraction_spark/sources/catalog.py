@@ -138,6 +138,28 @@ def snapshot_id(path: str) -> str:
     return h.hexdigest()
 
 
+def partition_day_span(root: str, name: str) -> int | None:
+    """Calendar days from the first to the last ``ts_day`` partition of a
+    table, both included, read off the directory listing alone (Iceberg's
+    partition summaries give the same without a scan).  ``None`` when the
+    table has no day partitions or one whose value is not a date (the
+    NULL partition), so callers fall back to a data witness."""
+    from datetime import date
+
+    base = table_path(root, name)
+    days = set()
+    for cb in os.listdir(base) if os.path.isdir(base) else ():
+        cb_path = os.path.join(base, cb)
+        if cb.startswith("conv_bucket=") and os.path.isdir(cb_path):
+            days.update(td.split("=", 1)[1] for td in os.listdir(cb_path)
+                        if td.startswith("ts_day="))
+    try:
+        parsed = sorted(date.fromisoformat(d) for d in days)
+    except ValueError:
+        return None
+    return (parsed[-1] - parsed[0]).days + 1 if parsed else None
+
+
 def drop_partitions_before(root: str, name: str, horizon: str) -> int:
     """Retention as partition deletion: remove ts_day=<d> directories with
     d < horizon — the Parquet stand-in for Iceberg's metadata-only

@@ -278,3 +278,56 @@ def test_gap_fill_rollup_gate_picks_dense_on_wide_grid(spark):
     assert dense_plan.count("Window") != plain_plan.count("Window") or len(
         dense_plan
     ) > len(plain_plan)
+
+
+_ROLLUP_SCHEMA = (
+    "conv_id string, bucket_start timestamp, turn_cnt bigint, tool_call_cnt bigint, "
+    "latency_sum double, latency_cnt bigint, latency_min double, latency_max double, "
+    "latency_p95 double, latency_avg double, tier string"
+)
+
+
+def _random_rollup(spark, seed):
+    """A full-schema 1m rollup: sparse buckets over up to four days (runs
+    that cross midnight and span whole days), NULL feature values
+    scattered, leading and trailing, and a one-row conversation."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    for i in range(6):
+        span = 0 if i == 0 else int(rng.integers(60, 4 * 1440))
+        k = int(rng.integers(1, 4 if i % 2 else 30))
+        offs = sorted({0, span, *rng.integers(0, span + 1, k).tolist()})
+        t0 = pd.Timestamp("2024-03-30 17:00") + pd.Timedelta(minutes=int(rng.integers(0, 600)))
+        for j, off in enumerate(offs):
+            avg = float(rng.normal())
+            if rng.random() < 0.3 or (i == 3 and j < 2) or (i == 4 and j >= len(offs) - 3):
+                avg = None  # scattered, leading (conv 3), trailing (conv 4)
+            mx = None if rng.random() < 0.3 else float(rng.normal())
+            n = int(rng.integers(1, 9))
+            rows.append((f"c{i}", (t0 + pd.Timedelta(minutes=off)).to_pydatetime(), n,
+                         int(rng.integers(0, n + 1)), avg, n, avg, mx, avg, avg, "1m"))
+    return spark.createDataFrame(rows, _ROLLUP_SCHEMA)
+
+
+@pytest.mark.parametrize("limit", [1, 2, 3])
+def test_interpolate_runs_equals_densify_interpolate(spark, limit):
+    """The plain gap-fill path (run generation over the sparse rows) equals
+    densify → count-coalesce → interpolate on every column, bit for bit."""
+    from pyspark.sql import functions as F
+
+    cols = ["latency_avg", "latency_max"]
+    for seed in (limit, limit + 10):
+        r = _random_rollup(spark, seed)
+        dense = G.densify(r, "1m").withColumn(
+            "turn_cnt", F.coalesce("turn_cnt", F.lit(0))
+        ).withColumn("tool_call_cnt", F.coalesce("tool_call_cnt", F.lit(0)))
+        want = G.interpolate(dense, cols, limit=limit, with_locf=True)
+        got = G.interpolate_runs(r, "1m", cols, limit=limit, with_locf=True)
+        assert got.columns == want.columns
+
+        def rows(df):
+            return df.toPandas().sort_values(["conv_id", "bucket_start"]).reset_index(drop=True)
+
+        a, b = rows(got), rows(want)
+        assert a["gap_filled"].any() and a["is_gap"].any()
+        pd.testing.assert_frame_equal(a, b, check_exact=True)
